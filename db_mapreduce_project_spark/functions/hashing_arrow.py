@@ -34,6 +34,7 @@ from typing import Callable, Iterator
 import numpy as np
 import pandas as pd
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 from .hashing import FP_CHAR_BASE, FP_MOD, FP_MOD2, FP_WORD_BASE
@@ -45,31 +46,27 @@ import re
 _WS_RE = re.compile("[ \t\n\x0b\x0c\r]+")
 
 
-def spread_narrow(
-    d: DataFrame, min_parts: int = 8, parts: int = 32
-) -> DataFrame:
+def spread_narrow(d: DataFrame) -> DataFrame:
     """Widen a NARROW input before a Python kernel stage: the
     fixture parquet is single-row-group, so without this the whole
-    batch kernel runs in ONE task — and, unlike the Catalyst folds
-    these kernels replace, the kernel's output inherits the scan's
-    partitioning (the old `.distinct()` exchange used to spread the
-    downstream consumers).  Decision reads the optimizer's size
-    estimate (no physical planning, no job): a scan under
-    min_parts x maxPartitionBytes cannot split wider than min_parts;
+    batch kernel (or per-doc codec loop) runs in ONE task — and,
+    unlike the Catalyst folds these kernels replace, the kernel's
+    output inherits the scan's partitioning.  The width is the
+    session's defaultParallelism.  Decision reads the optimizer's
+    size estimate (no physical planning, no job): a scan under
+    width x maxPartitionBytes cannot split wider than the width;
     anything bigger passes through untouched — at real scale this
-    is a no-op, never a coalesce and never a payload shuffle."""
+    is a no-op, never a coalesce and never a payload shuffle.  Both
+    probes are private JVM APIs, so a failure passes the input
+    through unchanged."""
+    parts = d.sparkSession.sparkContext.defaultParallelism
     try:
-        max_part = int(
-            d.sparkSession._jsparkSession.sessionState()
-            .conf()
-            .filesMaxPartitionBytes()
-        )
-    except Exception:
-        max_part = 128 * 1024 * 1024
-    est = int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est < min_parts * max_part:
-        return d.repartition(parts)
-    return d
+        jss = d.sparkSession._jsparkSession
+        max_part = int(jss.sessionState().conf().filesMaxPartitionBytes())
+        est = int(d._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (AttributeError, Py4JError):
+        return d
+    return d.repartition(parts) if est < parts * max_part else d
 
 
 def _codepoints(strings: list[str]) -> tuple[np.ndarray, np.ndarray]:

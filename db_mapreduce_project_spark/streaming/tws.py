@@ -69,11 +69,6 @@ class UserTotalsProcessor(StatefulProcessor):
 
 SESSION_GAP_MS = 5 * 60 * 1000  # matches jobs.GAP ("5 minutes")
 
-SESSION_OUTPUT_SCHEMA = (
-    "user_id BIGINT, n_events BIGINT, sum_value DOUBLE, "
-    "start_ms BIGINT, end_ms BIGINT"
-)
-
 
 class UserSessionTimerProcessor(StatefulProcessor):
     """Event-time sessionization driven by the TIMER half of the
@@ -199,36 +194,3 @@ def stream_user_totals_tws(
         .start()
     )
 
-
-def stream_user_sessions_tws(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_user_sessions_tws",
-):
-    """Streaming runner for the timer-based sessionizer: event-time
-    mode (timers fire off the watermark), append output, availableNow
-    replay, memory sink.  Same protobuf-transport gate as the totals
-    runner; the processor semantics are certified in-process by
-    tests/test_streaming.py (timer-path slice invariance)."""
-    from pyspark.sql import functions as F
-
-    from .jobs import _stream_events
-
-    ev = (
-        _stream_events(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .select("user_id", F.unix_millis("ts").alias("ts_ms"), "value", "ts")
-    )
-    out = ev.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserSessionTimerProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
-    return (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )

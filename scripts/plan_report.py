@@ -13,7 +13,7 @@ Usage: python scripts/plan_report.py [--sf DIR] [-o PLANS.md]
 
 Two query classes have no single lazy plan to audit and are
 annotated instead of analyzed:
-  * iterative — driver-orchestrated rounds (label propagation,
+  * iterative — driver-orchestrated rounds (star-contraction CC,
     k-means, PageRank, ...); per-round plans are asserted in
     tests/test_plans.py;
   * streaming — the stream_sink_* queries RUN a micro-batch
@@ -48,7 +48,7 @@ ITERATIVE = {
     "stream_sink_hourly_counts",
     "stream_sink_dedup_pairs",
     "triangle_count_trade",
-    "dedup_materialize_corpus",  # label-propagation loop
+    "dedup_materialize_corpus",  # star-contraction CC loop
     # eager localCheckpoint releases mid-pipeline caches (round-7
     # ADVICE); lazy candidate plan asserted in tests/test_plans.py
     "dedup_containment_ensemble",

@@ -182,49 +182,53 @@ def test_ann_sq8_adc_fidelity_vs_exact_ip(spark):
             assert abs(r["adc"] - ip) / abs(ip) < 0.15, (r, ip)
 
 
-def test_cc_largestar_equals_labelprop(spark):
-    """Large-star/small-star CC must produce exactly the same dup
-    groups as min-label propagation — same labels (component min),
-    same members, same sizes."""
-    a = registry.QUERIES["dedup_clusters"](spark, SF).collect()
-    b = registry.QUERIES["dedup_clusters_largestar"](spark, SF).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+def _union_find_clusters(pairs):
+    """Pure-Python reference: connected components of an edge list,
+    rolled up like dedup_clusters (cluster_id = component min,
+    cluster_size, comma-joined sorted members; singletons absent)."""
+    parent, comps = {}, {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        lo, hi = sorted((find(a), find(b)))
+        parent[hi] = lo
+    for x in parent:
+        comps.setdefault(find(x), []).append(x)
+    return sorted((r, len(m), ",".join(map(str, sorted(m)))) for r, m in comps.items())
 
 
-def test_cc_pointer_jumping_logarithmic_rounds(spark):
-    """The CC label loop's pointer-jumping step (round 14, VERDICT
-    r13 #6) must converge in O(log diameter) rounds: a 64-vertex
-    CHAIN has diameter 63, so plain min-label propagation needs ~64
-    rounds (and the old 20-round bound made it RAISE); with
-    label(label(v)) doubling it must finish within 9 rounds and
-    still assign every vertex the component minimum."""
-    import pyspark.sql.functions as F
+def test_cc_largestar_matches_union_find(spark, sf_dir):
+    """Star-contraction CC must produce exactly the dup groups an
+    independent union-find builds from the same ngram-jaccard pairs —
+    same cluster ids (component min), sizes and members."""
+    for sf in (sf_dir, SF):
+        pairs = registry.QUERIES["dedup_ngram_jaccard"](spark, sf).collect()
+        want = _union_find_clusters((r["doc_a"], r["doc_b"]) for r in pairs)
+        got = registry.QUERIES["dedup_clusters_largestar"](spark, sf).collect()
+        assert want, f"no dup groups at {sf}"
+        assert sorted(map(tuple, got)) == want, sf
 
-    from db_mapreduce_project_spark.operators.dedup import (
-        CC_ROUNDS_TAKEN,
-        cc_min_label_loop,
-    )
+
+def test_cc_star_contraction_chain(spark):
+    """A 64-vertex CHAIN (diameter 63) through the production CC core
+    must converge inside its 15-round bound (it raises otherwise) to
+    the star on the component minimum: all 63 edges point at 0, and
+    the fingerprint count the broadcast guard reads is 63."""
+    from db_mapreduce_project_spark.operators.dedup import _star_edges_converged
 
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    edges = pairs.union(
-        pairs.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    ).localCheckpoint(eager=True)
-    touched = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels, fp = cc_min_label_loop(touched, edges)
-    rows = labels.collect()
-    assert len(rows) == n and all(r["label"] == 0 for r in rows)
-    assert fp[0] == n  # fingerprint count drives the broadcast guard
-    assert CC_ROUNDS_TAKEN["rounds"] is not None
-    assert CC_ROUNDS_TAKEN["rounds"] <= 9, CC_ROUNDS_TAKEN
+    edges, fp = _star_edges_converged(pairs)
+    rows = edges.collect()
+    assert sorted(r["u"] for r in rows) == list(range(1, n))
+    assert all(r["v"] == 0 for r in rows)
+    assert fp[0] == n - 1
 
 
 def test_incremental_delta_consistent_with_full_lsh(spark):

@@ -47,29 +47,32 @@ def test_stable_sum_partition_invariant(spark, sf_dir, nparts):
 
 
 def test_minhash_signature_partition_invariant(spark, sf_dir):
-    """Sketches are pure hash arithmetic: signatures must be
+    """Sketches are pure hash arithmetic: the production MinHash path
+    (Arrow shingle kernel -> signature -> LSH bands) must be
     bit-identical under any input partitioning (this is what makes
     MinHash dedup reproducible across cluster sizes)."""
-    from pyspark.sql import functions as F2
-
     from db_mapreduce_project_spark.functions.hashing import (
-        minhash_signature,
-        word_shingles,
+        lsh_bands_portable,
+        minhash_signature_from_pairs,
+    )
+    from db_mapreduce_project_spark.functions.hashing_arrow import (
+        token_shingle_hash_pairs_arrow,
     )
 
     d = load_table(spark, sf_dir, "documents")
 
-    def sigs(docs):
-        sh = word_shingles(docs, "doc_id", "text", n=3).select(
-            "doc_id", F2.xxhash64("shingle").alias("sh")
-        )
-        return sorted(
-            tuple(r) for r in minhash_signature(
-                sh, "doc_id", num_hashes=32, shingle_col="sh"
-            ).collect()
+    def sketches(docs):
+        sh = token_shingle_hash_pairs_arrow(docs, "doc_id", "text")
+        # the kernel dedups shingles per document: no repeated row
+        assert sh.count() == sh.distinct().count()
+        sig = minhash_signature_from_pairs(sh, "doc_id", num_hashes=32)
+        bands = lsh_bands_portable(sig, "doc_id", num_hashes=32, bands=8)
+        return (
+            sorted(tuple(r) for r in sig.collect()),
+            sorted(tuple(r) for r in bands.collect()),
         )
 
-    assert sigs(d) == sigs(d.repartition(7))
+    assert sketches(d) == sketches(d.repartition(7))
 
 
 def test_stratified_sample_proportions(spark, sf_dir):

@@ -301,8 +301,8 @@ _UNKEYED_JOIN_OK = {
 _EAGER = {
     "dedup_clusters",
     "dedup_clusters_largestar",
-    "dedup_apply_keepers",  # runs the label-propagation loop eagerly
-    "dedup_materialize_corpus",  # same label-propagation loop
+    "dedup_apply_keepers",  # runs the star-contraction CC loop eagerly
+    "dedup_materialize_corpus",  # same star-contraction CC loop
     "ann_cosine_topk_matmul",
     "pagerank_trade",
     "kmeans_embeddings",
